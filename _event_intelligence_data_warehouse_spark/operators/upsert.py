@@ -9,11 +9,13 @@ Spark has no in-place mutation, so:
   rows pass through, unmatched incoming rows insert — produced as one
   logical plan, written back via atomic overwrite-swap.
 
-Scale notes: the incoming batch is typically ≪ the existing table, so the
-existing side streams and the batch broadcasts (AQE picks this up from
-size stats). The full-table rewrite in ``merge_upsert`` is the price of
-raw parquet — behind Delta/Iceberg the same plan becomes a MERGE with
-file-level pruning; the operator's interface doesn't change.
+Scale notes: the incoming batch is typically ≪ the existing table, so
+``merge_upsert`` broadcasts the batch (and the ≤ batch-sized set of
+existing keys it matched) and streams the existing side through
+broadcast joins: existing rows are scanned, never shuffled. The
+full-image rewrite is the price of raw parquet — behind Delta/Iceberg
+the same plan becomes a MERGE with file-level pruning; the operator's
+interface doesn't change.
 """
 
 from __future__ import annotations
@@ -49,36 +51,59 @@ def merge_upsert(
     keys: list[str],
     *,
     preserve: list[str] | None = None,
+    sk_col: str | None = None,
+    sk_source: DataFrame | None = None,
+    bulk: bool = False,
 ) -> DataFrame:
     """Full merged table image (U4: ON CONFLICT DO UPDATE,
-    load_facts.sql:92-98).
+    load_facts.sql:92-98), as the union of two parts:
 
-    ``preserve`` columns keep the *existing* row's value on match
-    (surrogate keys, first-seen timestamps); all other columns take the
-    incoming value. Column sets must match.
+    - ``existing`` LEFT JOIN the broadcast batch: matched rows take the
+      incoming value of every column except the ``preserve`` ones;
+      unmatched rows pass through unchanged. A NULL key never matches,
+      so its row keeps every value, surrogate key included.
+    - incoming rows whose key is not in ``existing``: anti-joined
+      against the existing keys the batch matched (a key-only semi-join
+      against the broadcast batch keys, at most one row per batch key).
+
+    Neither part shuffles ``existing``. Incoming keys must be unique.
+    ``bulk`` marks a batch too large to broadcast (a backfill): the
+    joins are then left to the planner, and new keys take the bulk
+    regime of :func:`assign_surrogate_keys`.
+
+    With ``sk_col`` the incoming frame lacks that column: matched rows
+    keep their key and inserted rows get new ones from
+    :func:`assign_surrogate_keys`, continuing from the max over
+    ``sk_source`` (default ``existing``; pass the full table when
+    ``existing`` is a partition-pruned subset). Otherwise the column
+    sets must match and inserted rows keep their incoming values.
     """
-    preserve = preserve or []
-    inc = incoming
-    ex = existing
-
-    matched = (
-        inc.alias("i")
-        .join(ex.alias("e"), keys, "inner")
-        .select(
-            *[F.col(f"e.{k}").alias(k) for k in keys],
-            *[
-                (F.col(f"e.{c}") if c in preserve else F.col(f"i.{c}")).alias(c)
-                for c in inc.columns
-                if c not in keys
-            ],
+    preserve = set(preserve or [])
+    if sk_col is not None:
+        preserve.add(sk_col)
+    bc = (lambda df: df) if bulk else F.broadcast
+    attrs = [c for c in incoming.columns if c not in keys]
+    batch = bc(incoming.select(
+        *keys,
+        *[F.col(c).alias(f"__i_{c}") for c in attrs],
+        F.lit(True).alias("__matched"),
+    ))
+    updated = existing.join(batch, keys, "left").select(*[
+        F.when(F.col("__matched"), F.col(f"__i_{c}"))
+        .otherwise(F.col(c)).alias(c)
+        if c in attrs and c not in preserve else F.col(c)
+        for c in existing.columns
+    ])
+    hit = existing.select(*keys).join(
+        bc(incoming.select(*keys)), keys, "left_semi"
+    )
+    inserted = incoming.join(bc(hit), keys, "left_anti")
+    if sk_col is not None:
+        inserted = assign_surrogate_keys(
+            existing if sk_source is None else sk_source,
+            inserted, sk_col, keys, bulk=bulk,
         )
-    )
-    unmatched_existing = ex.join(inc, keys, "left_anti")
-    unmatched_incoming = inc.join(ex, keys, "left_anti")
-    return (
-        matched.unionByName(unmatched_existing.select(matched.columns))
-        .unionByName(unmatched_incoming.select(matched.columns))
-    )
+    return updated.unionByName(inserted.select(existing.columns))
 
 
 #: Above this many new rows the global-window surrogate path would sort
@@ -95,44 +120,32 @@ def assign_surrogate_keys(
     sk_col: str,
     order_by: list[str],
     *,
-    bulk: bool | None = None,
+    bulk: bool = False,
 ) -> DataFrame:
     """Deterministic surrogate keys for new rows (U6): continue from
     max(existing sk) in the total order of ``order_by`` — which must be
     a UNIQUE key of ``new_rows`` (the natural key), or the total order
     (and therefore the assignment) is not well defined.
 
-    Two value-identical physical regimes:
+    Two value-identical physical regimes, chosen by the caller, who
+    knows its batch size:
 
-    - **incremental** (``bulk=False``, or auto below
-      :data:`SURROGATE_GLOBAL_WINDOW_MAX_ROWS`): one unpartitioned
-      row_number window. The batch sorts on a single reducer — fine for
-      the bounded new-key slices of a steady-state load, a scale-killer
-      for a backfill. Dimension call sites (plans/dims.py, scd2) pin
-      ``bulk=False``: their batches are dimension-cardinality by
-      construction and the auto-probe's count job would be waste.
-    - **bulk** (``bulk=True``, or auto above the threshold — the FACT
-      path, plans/facts.py, auto-detects): repartitionByRange on the
-      natural key, per-range-partition row_number, plus an exclusive
-      prefix-sum of partition counts as offsets. Every partition sorts
-      in parallel; the only global window runs over O(#partitions)
-      count rows — the aggregate-scale frame class. Keys are identical
+    - **incremental** (``bulk=False``): one unpartitioned row_number
+      window. The batch sorts on a single reducer — fine for dimension
+      batches and the bounded new-key slices of a steady-state load, a
+      scale-killer for a backfill.
+    - **bulk** (``bulk=True``; the fact path sets it when the batch
+      exceeds :data:`SURROGATE_GLOBAL_WINDOW_MAX_ROWS`):
+      repartitionByRange on the natural key, per-range-partition
+      row_number, plus an exclusive prefix-sum of partition counts as
+      offsets. Every partition sorts in parallel; the only global
+      window runs over O(#partitions) count rows. Keys are identical
       to the incremental path because range partitions tile the same
       total order (pinned by tests/test_upsert_scd2.py).
-
-    The r8 docstring claimed the window "only ever sees dimension
-    cardinality" — false on the fact path (plans/facts.py assigns
-    event_sk through here), which is exactly why the bulk regime
-    exists (r8 verdict item 4).
     """
     base = existing.agg(
         F.coalesce(F.max(sk_col), F.lit(0)).cast("long").alias("__base")
     )
-    if bulk is None:
-        # auto-probe: persist first so the count job doesn't recompute
-        # the (join-shaped) lineage a second time for the real pass
-        new_rows = cache.persist(new_rows)
-        bulk = new_rows.count() > SURROGATE_GLOBAL_WINDOW_MAX_ROWS
     if not bulk:
         w = Window.orderBy(*order_by)
         return (

@@ -18,7 +18,7 @@ from _event_intelligence_data_warehouse_spark.functions.keys import (
     venue_nk,
 )
 from _event_intelligence_data_warehouse_spark.operators.upsert import (
-    assign_surrogate_keys,
+    SURROGATE_GLOBAL_WINDOW_MAX_ROWS,
     dedup_keys,
     merge_upsert,
 )
@@ -97,6 +97,7 @@ def upsert_facts(
     incoming: DataFrame,
     *,
     sk_source: DataFrame | None = None,
+    bulk: bool = False,
 ) -> DataFrame:
     """Merge semantics of load_facts.sql:92-98: on event_nk match refresh
     the mutable attrs and loaded_at, preserving event_sk and the original
@@ -104,27 +105,17 @@ def upsert_facts(
 
     ``sk_source`` supplies the frame whose max(event_sk) seeds new keys —
     pass the FULL table when ``existing`` is a partition-pruned subset
-    (partitioned upsert), so continuation stays globally unique."""
-    inc = incoming.drop("_ingest_id")
-
-    matched_or_existing = merge_upsert(
-        existing.drop("event_sk"),
-        inc,
+    (partitioned upsert), so continuation stays globally unique.
+    ``bulk`` marks a batch too large to broadcast (see merge_upsert)."""
+    return merge_upsert(
+        existing,
+        incoming.drop("_ingest_id"),
         ["event_nk"],
         preserve=["ingested_at"],
+        sk_col="event_sk",
+        sk_source=sk_source,
+        bulk=bulk,
     )
-    # Re-attach surrogate keys: existing keys keep theirs, new keys extend.
-    with_sk = matched_or_existing.join(
-        existing.select("event_nk", "event_sk"), "event_nk", "left"
-    )
-    new_rows = with_sk.filter(F.col("event_sk").isNull()).drop("event_sk")
-    old_rows = with_sk.filter(F.col("event_sk").isNotNull())
-    new_rows = assign_surrogate_keys(
-        sk_source if sk_source is not None else existing,
-        new_rows, "event_sk", ["event_nk"],
-    )
-    cols = [c for c in existing.columns]
-    return old_rows.select(cols).unionByName(new_rows.select(cols))
 
 
 # Bucket count for the partitioned fact layout. 16 keeps test-scale file
@@ -154,38 +145,35 @@ def upsert_facts_partitioned(
     incremental batch (1) tags its rows with their buckets, (2) reads ONLY
     those buckets of the existing table (partition pruning on the scan),
     (3) merges, and (4) writes back with dynamic partition overwrite —
-    untouched buckets' files are never read or rewritten, so batch cost
-    is proportional to the increment. The surrogate-key base comes from a
-    column-pruned max over the full table (a footer-cheap scan of one
-    column). Returns the affected bucket ids (for observability/tests)."""
+    untouched buckets' files are never read or rewritten. The rewrite is
+    every affected bucket in full, so it tracks the increment only while
+    a batch has far fewer keys than there are buckets: at
+    ``FACT_BUCKETS`` = 16 an hourly batch of ~140 keys touches all 16.
+    The surrogate-key base comes from a column-pruned max over the full
+    table (one column of every bucket). Returns the affected bucket ids
+    (for observability/tests)."""
     from _event_intelligence_data_warehouse_spark import schemas
 
-    affected = sorted(
-        r[0]
-        for r in incoming.select(
-            fact_bucket(n=n_buckets).alias(FACT_PART_COL)
-        ).distinct().collect()
+    # One job yields both the affected buckets and the batch size that
+    # picks the surrogate-key regime.
+    per_bucket = incoming.groupBy(
+        fact_bucket(n=n_buckets).alias(FACT_PART_COL)
+    ).count().collect()
+    affected = sorted(r[0] for r in per_bucket)
+    bulk = sum(r[1] for r in per_bucket) > SURROGATE_GLOBAL_WINDOW_MAX_ROWS
+    full = wh.read(table, schemas.FACT_EVENTS)
+    bucketed = FACT_PART_COL in full.columns
+    # A stored table without the partition column predates the bucketed
+    # layout: no pruning is possible this batch — merge against the full
+    # image and write it back partitioned (one-time migration); every
+    # later batch prunes.
+    migrating = not bucketed and wh.exists(table)
+    existing_aff = (
+        full.filter(F.col(FACT_PART_COL).isin(affected)).drop(FACT_PART_COL)
+        if bucketed else full
     )
-    migrating = False
-    if wh.exists(table):
-        full = wh.read(table)
-        if FACT_PART_COL not in full.columns:
-            # One-time migration from the pre-bucketed flat layout: no
-            # partition column on disk means no pruning is possible this
-            # batch — merge against the full image and write it back
-            # partitioned; every later batch prunes.
-            migrating = True
-            existing_aff = full
-        else:
-            existing_aff = full.filter(
-                F.col(FACT_PART_COL).isin(affected)
-            ).drop(FACT_PART_COL)
-        sk_src = full
-    else:
-        existing_aff = wh.read(table, schemas.FACT_EVENTS)
-        sk_src = existing_aff
     merged = upsert_facts(
-        existing_aff, incoming, sk_source=sk_src
+        existing_aff, incoming, sk_source=full, bulk=bulk
     ).withColumn(FACT_PART_COL, fact_bucket(n=n_buckets))
     if migrating:
         # Dynamic overwrite would leave the legacy flat files at the

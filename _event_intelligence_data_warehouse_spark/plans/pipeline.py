@@ -17,6 +17,7 @@ design:
 from __future__ import annotations
 
 import argparse
+import functools
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -33,13 +34,17 @@ from _event_intelligence_data_warehouse_spark.storage import Warehouse
 
 WATERMARK = "fact_load.ingested_at"
 
-GOLD = {
-    "dim_date": schemas.DIM_DATE,
-    "dim_venue": schemas.DIM_VENUE,
-    "dim_category": schemas.DIM_CATEGORY,
-    "dim_source": schemas.DIM_SOURCE,
-    "fact_events": schemas.FACT_EVENTS,
-}
+GOLD = ("dim_date", "dim_venue", "dim_category", "dim_source", "fact_events")
+
+# The 7 invariant post-run counts (run_pipeline.py:65-87).
+SUMMARY_TABLES = ("raw_events", "dim_date", "dim_venue", "dim_category",
+                  "dim_source", "fact_events", "quality_log")
+
+
+def read_table(wh: Warehouse, table: str) -> DataFrame:
+    """A warehouse table read with its declared schema (no inference job;
+    an empty frame when the table does not exist yet)."""
+    return wh.read(table, schemas.TABLES[table])
 
 
 def step_ingest(wh: Warehouse, args, spark: SparkSession) -> dict:
@@ -70,7 +75,7 @@ def step_ingest(wh: Warehouse, args, spark: SparkSession) -> dict:
 def unprocessed_raw(wh: Warehouse) -> DataFrame:
     """Bronze rows past the fact-load watermark — the incremental filter
     (transform_events.sql:75 re-expressed)."""
-    raw = wh.read(bronze.RAW_TABLE, schemas.RAW_EVENTS)
+    raw = read_table(wh, bronze.RAW_TABLE)
     wm = wh.get_watermark(WATERMARK)
     if wm is not None:
         raw = raw.filter(F.col("ingested_at") > F.lit(wm).cast("timestamp"))
@@ -81,13 +86,16 @@ def step_transform_and_load(wh: Warehouse, spark: SparkSession) -> dict:
     """Staging cleanse + dim maintenance + fact upsert, then advance the
     watermark to exactly the batch that was loaded (fixes the reference's
     broken mark-processed — SURVEY.md §0.3)."""
-    raw = unprocessed_raw(wh)
-    if raw.isEmpty():
+    stg = stage_events(unprocessed_raw(wh), only_unprocessed=False).cache()
+    # One aggregate fills the cache and yields the batch size and the
+    # next watermark.
+    staged, max_ts = stg.agg(F.count("*"), F.max("ingested_at")).first()
+    if staged == 0:
+        stg.unpersist()
         return {"staged": 0}
-    stg = stage_events(raw, only_unprocessed=False).cache()
     now = F.current_timestamp()
 
-    gold = {name: wh.read(name, schema) for name, schema in GOLD.items()}
+    gold = {name: read_table(wh, name) for name in GOLD}
 
     new_dim_date = dims_mod.update_dim_date(gold["dim_date"], stg)
     new_dim_cat = dims_mod.update_dim_category(gold["dim_category"], stg, now)
@@ -101,20 +109,17 @@ def step_transform_and_load(wh: Warehouse, spark: SparkSession) -> dict:
 
     fact_rows = facts_mod.build_fact_rows(
         stg,
-        wh.read("dim_date"),
-        wh.read("dim_venue"),
-        wh.read("dim_category"),
-        wh.read("dim_source"),
+        read_table(wh, "dim_date"),
+        read_table(wh, "dim_venue"),
+        read_table(wh, "dim_category"),
+        read_table(wh, "dim_source"),
         loaded_at=now,
     ).select([f.name for f in schemas.FACT_EVENTS.fields if f.name != "event_sk"]
              + ["_ingest_id"])
     # Partition-pruned upsert: only the hash buckets containing this
-    # batch's keys are read and rewritten (storage.overwrite_partitions) —
-    # at 100 TB the merge cost tracks the increment, not the table.
+    # batch's keys are read and rewritten (storage.overwrite_partitions).
     facts_mod.upsert_facts_partitioned(wh, fact_rows)
 
-    max_ts = stg.agg(F.max("ingested_at")).first()[0]
-    staged = stg.count()
     if max_ts is not None:
         wh.set_watermark(WATERMARK, max_ts.isoformat(sep=" "))
     stg.unpersist()
@@ -122,7 +127,7 @@ def step_transform_and_load(wh: Warehouse, spark: SparkSession) -> dict:
 
 
 def step_quality(wh: Warehouse, spark: SparkSession, run_id: str) -> DataFrame:
-    raw = wh.read(bronze.RAW_TABLE, schemas.RAW_EVENTS)
+    raw = read_table(wh, bronze.RAW_TABLE)
     stg = stage_events(raw, only_unprocessed=False)
     checks = [
         quality_mod.check_null_event_names(raw, run_id),
@@ -130,11 +135,11 @@ def step_quality(wh: Warehouse, spark: SparkSession, run_id: str) -> DataFrame:
         quality_mod.check_price_min_gt_max(stg, run_id),
         quality_mod.check_duplicate_event_ids(raw, run_id),
         quality_mod.check_orphan_fact_records(
-            wh.read("fact_events", schemas.FACT_EVENTS),
-            wh.read("dim_date", schemas.DIM_DATE),
-            wh.read("dim_venue", schemas.DIM_VENUE),
-            wh.read("dim_category", schemas.DIM_CATEGORY),
-            wh.read("dim_source", schemas.DIM_SOURCE),
+            read_table(wh, "fact_events"),
+            read_table(wh, "dim_date"),
+            read_table(wh, "dim_venue"),
+            read_table(wh, "dim_category"),
+            read_table(wh, "dim_source"),
             run_id,
         ),
     ]
@@ -143,35 +148,28 @@ def step_quality(wh: Warehouse, spark: SparkSession, run_id: str) -> DataFrame:
         out = out.unionByName(c)
     out = out.select([f.name for f in schemas.QUALITY_LOG.fields])
     wh.append(bronze.QUALITY_LOG_TABLE, out)
-    return wh.read(bronze.QUALITY_LOG_TABLE)
+    return read_table(wh, bronze.QUALITY_LOG_TABLE)
 
 
 def step_kpis(wh: Warehouse, spark: SparkSession) -> dict[str, DataFrame]:
-    tables = {name: wh.read(name, schema) for name, schema in GOLD.items()}
+    tables = {name: read_table(wh, name) for name in GOLD}
     tables["ingestion_runs"] = bronze.current_runs(wh)
-    tables["quality_log"] = wh.read(
-        bronze.QUALITY_LOG_TABLE, schemas.QUALITY_LOG
-    )
+    tables["quality_log"] = read_table(wh, bronze.QUALITY_LOG_TABLE)
     return kpis_mod.register_views(spark, tables)
 
 
 def summary(wh: Warehouse) -> dict[str, int]:
-    """The 7 invariant post-run counts (run_pipeline.py:65-87)."""
-    out = {}
-    for t in [
-        "raw_events",
-        "dim_date",
-        "dim_venue",
-        "dim_category",
-        "dim_source",
-        "fact_events",
-        "quality_log",
-    ]:
-        try:
-            out[t] = wh.read(t).count()
-        except FileNotFoundError:
-            out[t] = 0
-    return out
+    """Row count per ``SUMMARY_TABLES`` entry, 0 for a missing table: the
+    tables' scans are unioned and counted in one groupBy."""
+    tagged = [
+        read_table(wh, t).select(F.lit(t).alias("table"))
+        for t in SUMMARY_TABLES
+    ]
+    counted = functools.reduce(DataFrame.union, tagged).groupBy(
+        "table"
+    ).count()
+    counts = dict(counted.collect())
+    return {t: counts.get(t, 0) for t in SUMMARY_TABLES}
 
 
 def run_pipeline(spark: SparkSession, warehouse_dir: str, args=None) -> dict:

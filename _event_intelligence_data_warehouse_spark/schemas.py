@@ -179,6 +179,21 @@ FACT_EVENTS = T.StructType(
     ]
 )
 
+# Stored warehouse table -> its declared schema: reads pass it so the
+# warehouse skips footer inference (storage.Warehouse.read). Partition
+# columns (the fact table's p_bucket) are not declared; a read recovers
+# them from the directory layout.
+TABLES = {
+    "raw_events": RAW_EVENTS,
+    "ingestion_log": INGESTION_LOG,
+    "quality_log": QUALITY_LOG,
+    "dim_date": DIM_DATE,
+    "dim_venue": DIM_VENUE,
+    "dim_category": DIM_CATEGORY,
+    "dim_source": DIM_SOURCE,
+    "fact_events": FACT_EVENTS,
+}
+
 # --------------------------------------------------------------------------
 # Semi-structured: Ticketmaster Discovery payload (api_ingestor.py:60-92).
 # Only the drilled paths are declared; everything else is pruned at scan.

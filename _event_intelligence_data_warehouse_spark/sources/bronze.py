@@ -19,6 +19,9 @@ from datetime import datetime, timezone
 from pyspark.sql import DataFrame, functions as F
 
 from _event_intelligence_data_warehouse_spark import schemas
+from _event_intelligence_data_warehouse_spark.operators.validate import (
+    observe_metrics,
+)
 from _event_intelligence_data_warehouse_spark.storage import Warehouse
 
 RAW_TABLE = "raw_events"
@@ -72,7 +75,7 @@ def land_batch(
         # Dedup-on-write: drop in-batch duplicates (keep first by id), then
         # anti-join the already-landed (source, raw_event_id) keys.
         landed = landed.dropDuplicates(["source", "raw_event_id"])
-        existing = wh.read(RAW_TABLE, schemas.RAW_EVENTS).select(
+        existing = wh.read(RAW_TABLE, schemas.TABLES[RAW_TABLE]).select(
             "source", "raw_event_id"
         )
         fresh = landed.join(
@@ -83,9 +86,13 @@ def land_batch(
         # Deterministic ingest_id: stable hash of the natural key + run.
         fresh = fresh.withColumn(
             "ingest_id", F.xxhash64(F.col("source"), F.col("raw_event_id"))
+        ).select([f.name for f in schemas.RAW_EVENTS.fields])
+        # records_loaded rides the append instead of a second anti-join.
+        fresh, landed_obs = observe_metrics(
+            fresh, "land_batch", {"loaded": F.count("*")}
         )
-        loaded = fresh.count()
-        wh.append(RAW_TABLE, fresh.select([f.name for f in schemas.RAW_EVENTS.fields]))
+        wh.append(RAW_TABLE, fresh)
+        loaded = landed_obs.get["loaded"]
 
         finished_at = datetime.now(timezone.utc).replace(tzinfo=None)
         _log(wh, spark, run_id, source, started_at, finished_at, fetched, loaded,
@@ -118,7 +125,8 @@ def _small(wh: Warehouse, table: str) -> bool:
 def _log(wh, spark, run_id, source, started_at, finished_at, fetched, loaded,
          status, error) -> None:
     """Append-only run log; 'current state' of a run = its last row
-    (schema_raw.sql:44-54 as an event log, SURVEY.md §2.1 S9)."""
+    (schema_raw.sql:44-54 as an event log, SURVEY.md §2.1 S9). The one
+    row is written as one file by one task."""
     row = spark.createDataFrame(
         [
             (
@@ -135,14 +143,14 @@ def _log(wh, spark, run_id, source, started_at, finished_at, fetched, loaded,
         ],
         schemas.INGESTION_LOG,
     )
-    wh.append(INGESTION_LOG, row)
+    wh.append(INGESTION_LOG, row.coalesce(1))
 
 
 def current_runs(wh: Warehouse) -> DataFrame:
     """Latest state per run_id from the append-only log."""
     from pyspark.sql.window import Window
 
-    log = wh.read(INGESTION_LOG, schemas.INGESTION_LOG)
+    log = wh.read(INGESTION_LOG, schemas.TABLES[INGESTION_LOG])
     w = (
         Window.partitionBy("run_id")
         .orderBy(

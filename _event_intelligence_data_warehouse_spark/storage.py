@@ -188,7 +188,12 @@ class Warehouse:
         immutable manifest, so any still-vacuum-retained snapshot is
         readable by resolving its manifest instead of the pointer. The
         reproducible-training-data primitive: pin a dataset to the exact
-        file set a run trained on, diff versions, audit what changed."""
+        file set a run trained on, diff versions, audit what changed.
+
+        Legacy mode reads an existing table with ``schema`` when one is
+        given, which skips the per-read footer-inference job; partition
+        columns still come from the directory layout. ``schema`` must
+        then name the stored columns and types."""
         if self.manifest:
             return self._m_read(table, schema, version=version)
         if version is not None:
@@ -196,7 +201,10 @@ class Warehouse:
                 "time-travel reads require Warehouse(manifest=True)"
             )
         if self.exists(table):
-            return self.spark.read.parquet(self.path(table))
+            reader = self.spark.read
+            if schema is not None:
+                reader = reader.schema(schema)
+            return reader.parquet(self.path(table))
         if schema is None:
             raise FileNotFoundError(f"table {table!r} missing and no schema given")
         return self.spark.createDataFrame([], schema)

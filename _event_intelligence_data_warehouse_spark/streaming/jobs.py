@@ -258,7 +258,11 @@ def stream_rollups_from_events(
     ])
 
     def read_ledger() -> DataFrame:
-        led = wh.read(ROLLUP_LEDGER, ledger_schema)
+        if not wh.exists(ROLLUP_LEDGER):
+            return wh.read(ROLLUP_LEDGER, ledger_schema)
+        # Inferred, not declared: only the stored columns tell a v1
+        # ledger (no applied_at) apart.
+        led = wh.read(ROLLUP_LEDGER)
         if "applied_at" not in led.columns:
             # one-time v1 -> v2 migration: unknown-age entries start
             # their retention clock now — strictly conservative (they

@@ -184,3 +184,50 @@ def test_compact_partitions_one_file_per_partition(spark, tmp_path):
     import os
     parts = [d for d in os.listdir(wh.path("t")) if d.startswith("p=")]
     assert sorted(parts) == ["p=0", "p=1", "p=2"], "partition layout lost"
+
+
+def _scan_paths(node, above=()):
+    """(scan node, its ancestors nearest-first) for every parquet scan."""
+    if node.nodeName().startswith("Scan parquet"):
+        yield node, list(reversed(above))
+    kids = node.children()
+    for i in range(kids.size()):
+        yield from _scan_paths(kids.apply(i), above + (node,))
+
+
+def test_hourly_upsert_never_shuffles_existing_rows(spark, tmp_path):
+    """An hourly-size batch merges into the stored fact table through
+    broadcast joins: the existing rows stream to the write. Walking up
+    from each scan of the stored table, the first Exchange is either
+    absent (the merged rows), a broadcast (the keys the batch matched,
+    at most one per batch key) or the one-row-per-task gather of the
+    partial max(event_sk) that seeds new keys — never a hash or range
+    shuffle of stored rows."""
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    facts_mod.upsert_facts_partitioned(wh, _fact_batch(spark, range(2000)))
+    full = wh.read("fact_events", schemas.FACT_EVENTS)
+    existing = full.filter(F.col(facts_mod.FACT_PART_COL).isin(list(range(16))))
+    batch = _fact_batch(spark, range(1990, 2130), status="cancelled")
+    merged = facts_mod.upsert_facts(
+        existing.drop(facts_mod.FACT_PART_COL), batch, sk_source=full
+    )
+    root = merged._jdf.queryExecution().executedPlan()
+    if root.nodeName() == "AdaptiveSparkPlan":
+        root = root.executedPlan()  # the initial plan, exchanges included
+
+    streamed = 0
+    scans = list(_scan_paths(root))
+    assert len(scans) == 3, "expected merged rows, matched keys, key base"
+    for _, above in scans:
+        first = next((n for n in above if "Exchange" in n.nodeName()), None)
+        if first is None:
+            streamed += 1
+        elif first.nodeName() == "Exchange":
+            assert first.outputPartitioning().toString() == "SinglePartition"
+            assert "partial_max(event_sk" in first.child().simpleString(50)
+        else:
+            assert first.nodeName() == "BroadcastExchange", first.nodeName()
+    assert streamed == 1, "the stored rows must stream to the union"
+    # the merge is still right: 140 batch keys, 10 of them updates
+    assert merged.count() == 2130
+    assert merged.filter(F.col("event_status") == "cancelled").count() == 140

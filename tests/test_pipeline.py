@@ -250,3 +250,36 @@ def test_driver_sample_head_slate_invariants():
         f"extra={sorted(set(repins) - set(want_repins))} "
         f"missing={sorted(set(want_repins) - set(repins))}"
     )
+
+
+def test_declared_schema_reads_equal_inferred_after_dirty_runs(spark, tmp_path):
+    """Every pipeline table read with its declared schema (no inference
+    job) has exactly the schema inference gives, the fact table's
+    p_bucket partition column included."""
+    from _event_intelligence_data_warehouse_spark import schemas
+    from _event_intelligence_data_warehouse_spark.storage import Warehouse
+
+    whdir = str(tmp_path / "whs")
+    for _ in range(2):
+        pipeline.run_pipeline(spark, whdir, _args(sample_rows=300, dirty=True))
+    wh = Warehouse(spark, whdir)
+    assert len(schemas.TABLES) == 8
+    for table, declared in schemas.TABLES.items():
+        inferred = spark.read.parquet(wh.path(table)).schema
+        assert wh.read(table, declared).schema == inferred, table
+    assert "p_bucket" in wh.read("fact_events", schemas.FACT_EVENTS).columns
+
+
+def test_summary_counts_missing_tables_as_zero(spark, tmp_path):
+    from _event_intelligence_data_warehouse_spark.sources import bronze
+    from _event_intelligence_data_warehouse_spark.sources.synthetic import (
+        generate_sample_events,
+    )
+    from _event_intelligence_data_warehouse_spark.storage import Warehouse
+
+    wh = Warehouse(spark, str(tmp_path / "whz"))
+    assert pipeline.summary(wh) == dict.fromkeys(pipeline.SUMMARY_TABLES, 0)
+    bronze.land_batch(wh, generate_sample_events(spark, 40), source="csv")
+    got = pipeline.summary(wh)
+    assert got.pop("raw_events") == 40
+    assert set(got.values()) == {0}

@@ -283,13 +283,23 @@ def test_assign_surrogate_keys_bulk_plan_has_no_global_sort(spark):
     assert "windowspecdefinition(__pid" in plan or "__pid" in plan
 
 
-def test_assign_surrogate_keys_auto_probe_routes_small_batch(spark):
-    """bulk=None on a small batch must keep the incremental keys (the
-    auto-probe threshold sits far above any dimension batch)."""
-    existing = spark.createDataFrame([(5, "x")], "sk long, nk string")
-    new = spark.createDataFrame([("b",), ("a",)], "nk string")
-    out = {
-        r.nk: r.sk
-        for r in assign_surrogate_keys(existing, new, "sk", ["nk"]).collect()
-    }
-    assert out == {"a": 6, "b": 7}
+def test_merge_upsert_null_key_rows_keep_surrogate_key(spark):
+    """A stored row whose natural key is NULL never matches a batch key,
+    so it must pass through with its surrogate key, and new keys continue
+    from the true max, which that row may hold. Two batches in a row."""
+    existing = spark.createDataFrame(
+        [(1, "a_1", "old"), (2, None, "orphan")], "sk long, nk string, v string"
+    )
+    batch1 = spark.createDataFrame(
+        [("a_1", "new"), ("b_2", "ins")], "nk string, v string"
+    )
+    once = merge_upsert(existing, batch1, ["nk"], sk_col="sk")
+    assert sorted(once.collect(), key=lambda r: r.sk) == [
+        (1, "a_1", "new"), (2, None, "orphan"), (3, "b_2", "ins"),
+    ]
+    batch2 = spark.createDataFrame([("c_3", "ins2")], "nk string, v string")
+    twice = merge_upsert(once, batch2, ["nk"], sk_col="sk")
+    assert sorted(twice.collect(), key=lambda r: r.sk) == [
+        (1, "a_1", "new"), (2, None, "orphan"), (3, "b_2", "ins"),
+        (4, "c_3", "ins2"),
+    ]
