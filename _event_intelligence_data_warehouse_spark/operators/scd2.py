@@ -11,12 +11,95 @@ Validity is timestamp-grained (the reference's DATE-grained valid_from
 collapses two same-day changes — SURVEY.md §7.3e).
 
 Pure DataFrame program: one join + three unions, no driver collects.
+The change detection (:func:`scd2_changes`) is its own step, so a caller
+can ask whether a batch changes the dimension before rewriting it.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+
+def scd2_changes(
+    current_table: DataFrame, incoming: DataFrame, *, nk: str, attrs: list[str]
+) -> DataFrame:
+    """The incoming rows ``nk, *attrs`` that need a new version: their nk
+    has no current version, or a NULL-safe attribute comparison with the
+    current version differs. ``__known`` marks the changed ones, whose
+    current version closes. ``incoming`` holds at most one row per nk
+    (pre-dedup with operators.upsert.dedup_keys)."""
+    cur = current_table.filter(F.col("is_current")).select(
+        nk, *attrs, F.lit(True).alias("__known")
+    )
+    joined = incoming.select(nk, *attrs).alias("i").join(
+        cur.alias("c"), nk, "left"
+    )
+    changed = F.lit(False)
+    for a in attrs:
+        changed = changed | ~F.col(f"i.{a}").eqNullSafe(F.col(f"c.{a}"))
+    known = F.col("c.__known").isNotNull()
+    return joined.filter(~known | changed).select(
+        nk, *[F.col(f"i.{a}").alias(a) for a in attrs], known.alias("__known")
+    )
+
+
+def scd2_image(
+    current_table: DataFrame,
+    changes: DataFrame,
+    *,
+    nk: str,
+    sk_col: str,
+    effective_ts: Column,
+    order_by: list[str] | None = None,
+    defaults: dict[str, Column] | None = None,
+) -> DataFrame:
+    """The new full image of an SCD2 dimension given its
+    :func:`scd2_changes`: each changed nk's current version closes
+    (``valid_to=effective_ts``, ``is_current=false``), every change
+    appends a current version with a new surrogate key, and every other
+    row passes through untouched."""
+    cols = current_table.columns
+    cur = current_table.filter(F.col("is_current"))
+    hist = current_table.filter(~F.col("is_current"))
+    changed_nks = changes.filter(F.col("__known")).select(nk)
+
+    closed = (
+        cur.join(changed_nks, nk, "left_semi")
+        .withColumn("valid_to", effective_ts)
+        .withColumn("is_current", F.lit(False))
+    )
+    untouched_current = cur.join(changed_nks, nk, "left_anti")
+
+    # New version rows: surrogate keys continue deterministically.
+    from _event_intelligence_data_warehouse_spark.operators.upsert import (
+        assign_surrogate_keys,
+    )
+
+    fresh = (
+        changes.drop("__known")
+        .withColumn("valid_from", effective_ts)
+        .withColumn("valid_to", F.lit(None).cast("timestamp"))
+        .withColumn("is_current", F.lit(True))
+    )
+    defaults = defaults or {}
+    types = dict(current_table.dtypes)
+    for c in cols:
+        if c not in fresh.columns and c != sk_col:
+            fresh = fresh.withColumn(
+                c, defaults.get(c, F.lit(None).cast(types[c]))
+            )
+    # bulk=False: SCD2 change slices are dimension-cardinality
+    fresh = assign_surrogate_keys(
+        current_table, fresh, sk_col, order_by or [nk], bulk=False
+    ).select(cols)
+
+    return (
+        hist.select(cols)
+        .unionByName(closed.select(cols))
+        .unionByName(untouched_current.select(cols))
+        .unionByName(fresh)
+    )
 
 
 def scd2_apply(
@@ -44,62 +127,14 @@ def scd2_apply(
                                is_current=false) + append new version
     Historical (already-closed) rows always pass through untouched.
     """
-    cur = current_table.filter(F.col("is_current"))
-    hist = current_table.filter(~F.col("is_current"))
-
-    inc = incoming.select(nk, *attrs)
-    joined = inc.alias("i").join(cur.alias("c"), nk, "left")
-
-    # NULL-safe attribute comparison: any attr differing => changed.
-    changed_pred = F.lit(False)
-    for a in attrs:
-        changed_pred = changed_pred | ~F.col(f"i.{a}").eqNullSafe(F.col(f"c.{a}"))
-
-    is_new = F.col(f"c.{sk_col}").isNull()
-
-    new_versions = joined.filter(is_new | changed_pred).select(
-        F.col(f"i.{nk}").alias(nk) if nk not in [] else nk,
-        *[F.col(f"i.{a}").alias(a) for a in attrs],
-    )
-    changed_nks = joined.filter(~is_new & changed_pred).select(F.col(nk).alias(nk))
-
-    closed = (
-        cur.join(changed_nks, nk, "left_semi")
-        .withColumn("valid_to", effective_ts)
-        .withColumn("is_current", F.lit(False))
-    )
-    untouched_current = cur.join(changed_nks, nk, "left_anti")
-
-    # New version rows: surrogate keys continue deterministically.
-    from _event_intelligence_data_warehouse_spark.operators.upsert import (
-        assign_surrogate_keys,
-    )
-
-    extra_cols = [
-        c
-        for c in current_table.columns
-        if c not in {sk_col, nk, *attrs, "valid_from", "valid_to", "is_current"}
-    ]
-    fresh = (
-        new_versions.withColumn("valid_from", effective_ts)
-        .withColumn("valid_to", F.lit(None).cast("timestamp"))
-        .withColumn("is_current", F.lit(True))
-    )
-    defaults = defaults or {}
-    for c in extra_cols:
-        fresh = fresh.withColumn(
-            c, defaults.get(c, F.lit(None).cast(dict(current_table.dtypes)[c]))
-        )
-    # bulk=False: SCD2 change slices are dimension-cardinality
-    fresh = assign_surrogate_keys(
-        current_table, fresh, sk_col, order_by or [nk], bulk=False
-    ).select(current_table.columns)
-
-    return (
-        hist.select(current_table.columns)
-        .unionByName(closed.select(current_table.columns))
-        .unionByName(untouched_current.select(current_table.columns))
-        .unionByName(fresh)
+    return scd2_image(
+        current_table,
+        scd2_changes(current_table, incoming, nk=nk, attrs=attrs),
+        nk=nk,
+        sk_col=sk_col,
+        effective_ts=effective_ts,
+        order_by=order_by,
+        defaults=defaults,
     )
 
 

@@ -41,8 +41,10 @@ def dedup_keys(df: DataFrame, keys: list[str], order_by: list) -> DataFrame:
 def insert_if_absent(existing: DataFrame, incoming: DataFrame,
                      keys: list[str]) -> DataFrame:
     """Rows of ``incoming`` whose key is not in ``existing`` (U3:
-    ON CONFLICT DO NOTHING, transform_events.sql:97,115,124,138)."""
-    return incoming.join(existing.select(*keys).distinct(), keys, "left_anti")
+    ON CONFLICT DO NOTHING, transform_events.sql:97,115,124,138). An
+    anti-join ignores duplicate keys on the ``existing`` side, so they
+    need no distinct (and no shuffle)."""
+    return incoming.join(existing.select(*keys), keys, "left_anti")
 
 
 def merge_upsert(

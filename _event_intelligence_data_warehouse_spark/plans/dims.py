@@ -1,13 +1,19 @@
 """Dimension builds (SURVEY.md §2.5 U1/U3/U5/U6, §2.3 D1-D6).
 
-Each ``update_dim_*`` takes the staged batch plus the existing dimension
-image and returns the new image; storage writes it via atomic swap. All
-surrogate keys are deterministic (row_number over the natural key,
-continuing from the existing max) — reproducibility is a correctness
-feature here, not a nicety.
+Every change to a dimension adds rows: an insert-if-absent insert, or a
+new SCD2 version. So each dimension is two steps: ``*_delta`` takes the
+existing image and the staged batch and returns the batch's key-level
+delta; ``*_image`` builds the new full image from that delta. The
+pipeline collects which deltas are non-empty in one action and writes a
+dimension only when the batch changes it (or the table does not exist
+yet). All surrogate keys are deterministic (row_number over the natural
+key, continuing from the existing max) — reproducibility is a
+correctness feature here, not a nicety.
 """
 
 from __future__ import annotations
+
+import functools
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -21,7 +27,10 @@ from _event_intelligence_data_warehouse_spark.functions.keys import (
     source_type_expr,
     venue_nk,
 )
-from _event_intelligence_data_warehouse_spark.operators.scd2 import scd2_apply
+from _event_intelligence_data_warehouse_spark.operators.scd2 import (
+    scd2_changes,
+    scd2_image,
+)
 from _event_intelligence_data_warehouse_spark.operators.upsert import (
     assign_surrogate_keys,
     dedup_keys,
@@ -47,40 +56,45 @@ def date_attributes(full_date: Column) -> list[Column]:
     ]
 
 
-def update_dim_date(existing: DataFrame, stg: DataFrame) -> DataFrame:
-    """Insert-if-absent of the batch's distinct dates
+def date_delta(existing: DataFrame, stg: DataFrame) -> DataFrame:
+    """The batch's distinct dates not yet in dim_date
     (transform_events.sql:81-97)."""
     dates = (
         stg.filter(F.col("event_date").isNotNull())
         .select(F.col("event_date").alias("full_date"))
         .distinct()
     )
-    new = insert_if_absent(existing.select("full_date"), dates, ["full_date"])
-    new = new.select(F.col("full_date"), *date_attributes(F.col("full_date")))
+    return insert_if_absent(existing, dates, ["full_date"])
+
+
+def date_image(
+    existing: DataFrame, delta: DataFrame, now: Column
+) -> DataFrame:
+    """``now`` is unused: dim_date has no load-time column."""
+    d = F.col("full_date")
+    new = delta.select(d, *date_attributes(d))
     new = assign_surrogate_keys(
         existing, new, "date_id", ["full_date"], bulk=False
     )
     return existing.unionByName(new.select(existing.columns))
 
 
-def update_dim_category(
-    existing: DataFrame, stg: DataFrame, now: Column
-) -> DataFrame:
+def category_delta(existing: DataFrame, stg: DataFrame) -> DataFrame:
     """UNIQUE(category_name, subcategory) insert-if-absent
     (transform_events.sql:118-124)."""
-    cats = (
-        stg.select(
-            F.col("category").alias("category_name"), F.col("subcategory")
-        )
-        .distinct()
-    )
-    new = insert_if_absent(existing, cats, ["category_name", "subcategory"])
+    cats = stg.select(
+        F.col("category").alias("category_name"), F.col("subcategory")
+    ).distinct()
+    return insert_if_absent(existing, cats, ["category_name", "subcategory"])
+
+
+def category_image(
+    existing: DataFrame, delta: DataFrame, now: Column
+) -> DataFrame:
     new = (
-        new.withColumn("segment", F.lit(None).cast("string"))
+        delta.withColumn("segment", F.lit(None).cast("string"))
         .withColumn("created_at", now)
     )
-    # bulk=False: distinct dimension slices are dimension-cardinality
-    # by construction; skip the auto-probe count job
     new = assign_surrogate_keys(
         existing, new, "category_sk", ["category_name", "subcategory"],
         bulk=False,
@@ -88,13 +102,17 @@ def update_dim_category(
     return existing.unionByName(new.select(existing.columns))
 
 
-def update_dim_source(existing: DataFrame, stg: DataFrame, now: Column) -> DataFrame:
-    """UNIQUE(source_name) insert-if-absent with type mapping
-    (transform_events.sql:127-138)."""
+def source_delta(existing: DataFrame, stg: DataFrame) -> DataFrame:
+    """UNIQUE(source_name) insert-if-absent (transform_events.sql:127-138)."""
     srcs = stg.select(F.col("source").alias("source_name")).distinct()
-    new = insert_if_absent(existing, srcs, ["source_name"])
+    return insert_if_absent(existing, srcs, ["source_name"])
+
+
+def source_image(
+    existing: DataFrame, delta: DataFrame, now: Column
+) -> DataFrame:
     new = (
-        new.withColumn("source_type", source_type_expr("source_name"))
+        delta.withColumn("source_type", source_type_expr("source_name"))
         .withColumn("created_at", now)
     )
     new = assign_surrogate_keys(
@@ -106,10 +124,11 @@ def update_dim_source(existing: DataFrame, stg: DataFrame, now: Column) -> DataF
 VENUE_ATTRS = ["venue_name", "city", "country", "latitude", "longitude"]
 
 
-def update_dim_venue(existing: DataFrame, stg: DataFrame, now: Column) -> DataFrame:
-    """Real SCD2 on venue (U5): close + version on attribute change.
-    Incoming = one row per venue_nk, deterministic tie-break (the
-    reference's DISTINCT ON is order-undefined — transform_events.sql:106)."""
+def venue_delta(existing: DataFrame, stg: DataFrame) -> DataFrame:
+    """Real SCD2 on venue (U5): the venues that are new or whose
+    attributes changed. Incoming = one row per venue_nk, deterministic
+    tie-break (the reference's DISTINCT ON is order-undefined —
+    transform_events.sql:106)."""
     incoming = (
         stg.select(
             venue_nk("venue_name", "venue_city").alias("venue_nk"),
@@ -124,13 +143,36 @@ def update_dim_venue(existing: DataFrame, stg: DataFrame, now: Column) -> DataFr
     incoming = dedup_keys(
         incoming, ["venue_nk"], [F.asc_nulls_last("_pos")]
     ).drop("_pos")
-    return scd2_apply(
+    return scd2_changes(existing, incoming, nk="venue_nk", attrs=VENUE_ATTRS)
+
+
+def venue_image(
+    existing: DataFrame, delta: DataFrame, now: Column
+) -> DataFrame:
+    """Close + version on attribute change."""
+    return scd2_image(
         existing,
-        incoming,
+        delta,
         nk="venue_nk",
-        attrs=VENUE_ATTRS,
         sk_col="venue_sk",
         effective_ts=now,
         order_by=["venue_nk"],
         defaults={"created_at": now},
     )
+
+
+# name -> (delta, image): the delta decides whether the dimension is
+# rewritten, the image is built from that same delta.
+DIMENSIONS = {
+    "dim_date": (date_delta, date_image),
+    "dim_category": (category_delta, category_image),
+    "dim_source": (source_delta, source_image),
+    "dim_venue": (venue_delta, venue_image),
+}
+
+
+def changed(deltas: dict[str, DataFrame]) -> set[str]:
+    """The dimensions whose delta has a row, in one action. A delta holds
+    one row per new key or version, a dimension's worth at most."""
+    tagged = [d.select(F.lit(name).alias("dim")) for name, d in deltas.items()]
+    return {r.dim for r in functools.reduce(DataFrame.union, tagged).collect()}

@@ -95,17 +95,15 @@ def step_transform_and_load(wh: Warehouse, spark: SparkSession) -> dict:
         return {"staged": 0}
     now = F.current_timestamp()
 
-    gold = {name: read_table(wh, name) for name in GOLD}
-
-    new_dim_date = dims_mod.update_dim_date(gold["dim_date"], stg)
-    new_dim_cat = dims_mod.update_dim_category(gold["dim_category"], stg, now)
-    new_dim_src = dims_mod.update_dim_source(gold["dim_source"], stg, now)
-    new_dim_venue = dims_mod.update_dim_venue(gold["dim_venue"], stg, now)
-
-    wh.overwrite("dim_date", new_dim_date)
-    wh.overwrite("dim_category", new_dim_cat)
-    wh.overwrite("dim_source", new_dim_src)
-    wh.overwrite("dim_venue", new_dim_venue)
+    # A dimension is rewritten only when the batch changes it.
+    dims = dims_mod.DIMENSIONS
+    existing = {name: read_table(wh, name) for name in dims}
+    deltas = {name: delta(existing[name], stg)
+              for name, (delta, _) in dims.items()}
+    changed = dims_mod.changed(deltas)
+    for name, (_, image) in dims.items():
+        if name in changed or not wh.exists(name):
+            wh.overwrite(name, image(existing[name], deltas[name], now))
 
     fact_rows = facts_mod.build_fact_rows(
         stg,
@@ -127,13 +125,11 @@ def step_transform_and_load(wh: Warehouse, spark: SparkSession) -> dict:
 
 
 def step_quality(wh: Warehouse, spark: SparkSession, run_id: str) -> DataFrame:
-    raw = read_table(wh, bronze.RAW_TABLE)
-    stg = stage_events(raw, only_unprocessed=False)
-    checks = [
-        quality_mod.check_null_event_names(raw, run_id),
-        quality_mod.check_invalid_event_dates(raw, run_id),
-        quality_mod.check_price_min_gt_max(stg, run_id),
-        quality_mod.check_duplicate_event_ids(raw, run_id),
+    """The five logged checks: checks 1-4 in one scan of ``raw_events``,
+    then the orphan check over the fact and its dimensions."""
+    out = quality_mod.run_raw_checks_one_pass(
+        read_table(wh, bronze.RAW_TABLE), run_id
+    ).unionByName(
         quality_mod.check_orphan_fact_records(
             read_table(wh, "fact_events"),
             read_table(wh, "dim_date"),
@@ -141,12 +137,8 @@ def step_quality(wh: Warehouse, spark: SparkSession, run_id: str) -> DataFrame:
             read_table(wh, "dim_category"),
             read_table(wh, "dim_source"),
             run_id,
-        ),
-    ]
-    out = checks[0]
-    for c in checks[1:]:
-        out = out.unionByName(c)
-    out = out.select([f.name for f in schemas.QUALITY_LOG.fields])
+        )
+    )
     wh.append(bronze.QUALITY_LOG_TABLE, out)
     return read_table(wh, bronze.QUALITY_LOG_TABLE)
 

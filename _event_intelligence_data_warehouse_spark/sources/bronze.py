@@ -22,7 +22,10 @@ from _event_intelligence_data_warehouse_spark import schemas
 from _event_intelligence_data_warehouse_spark.operators.validate import (
     observe_metrics,
 )
-from _event_intelligence_data_warehouse_spark.storage import Warehouse
+from _event_intelligence_data_warehouse_spark.storage import (
+    Warehouse,
+    literal_frame,
+)
 
 RAW_TABLE = "raw_events"
 INGESTION_LOG = "ingestion_log"
@@ -54,7 +57,10 @@ def land_batch(
         for src, dst in _CSV_TO_RAW.items():
             if src in rows.columns:
                 rows = rows.withColumnRenamed(src, dst)
-        fetched = rows.count()
+        # Both counts ride the bronze append: no job of their own.
+        rows, fetched_obs = observe_metrics(
+            rows, "land_batch_fetched", {"fetched": F.count("*")}
+        )
 
         landed = rows.select(
             F.lit(None).cast("long").alias("ingest_id"),
@@ -87,11 +93,11 @@ def land_batch(
         fresh = fresh.withColumn(
             "ingest_id", F.xxhash64(F.col("source"), F.col("raw_event_id"))
         ).select([f.name for f in schemas.RAW_EVENTS.fields])
-        # records_loaded rides the append instead of a second anti-join.
         fresh, landed_obs = observe_metrics(
             fresh, "land_batch", {"loaded": F.count("*")}
         )
         wh.append(RAW_TABLE, fresh)
+        fetched = fetched_obs.get["fetched"]
         loaded = landed_obs.get["loaded"]
 
         finished_at = datetime.now(timezone.utc).replace(tzinfo=None)
@@ -126,24 +132,12 @@ def _log(wh, spark, run_id, source, started_at, finished_at, fetched, loaded,
          status, error) -> None:
     """Append-only run log; 'current state' of a run = its last row
     (schema_raw.sql:44-54 as an event log, SURVEY.md §2.1 S9). The one
-    row is written as one file by one task."""
-    row = spark.createDataFrame(
-        [
-            (
-                None,
-                run_id,
-                source,
-                started_at,
-                finished_at,
-                fetched,
-                loaded,
-                status,
-                error,
-            )
-        ],
-        schemas.INGESTION_LOG,
-    )
-    wh.append(INGESTION_LOG, row.coalesce(1))
+    row is built from JVM literals and written as one file by one
+    task."""
+    wh.append(INGESTION_LOG, literal_frame(spark, schemas.INGESTION_LOG, (
+        None, run_id, source, started_at, finished_at, fetched, loaded,
+        status, error,
+    )))
 
 
 def current_runs(wh: Warehouse) -> DataFrame:

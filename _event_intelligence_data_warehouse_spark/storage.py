@@ -121,6 +121,20 @@ def _parse_part(pv: str, like) -> object:
     return pv
 
 
+def literal_frame(
+    spark: SparkSession, schema: T.StructType, row: tuple | None = None
+) -> DataFrame:
+    """One row of ``row``'s values, or no row when ``row`` is None, typed
+    by ``schema`` and built from JVM literals over a one-partition
+    ``range``: no Python rows are shipped, so no Python worker starts,
+    and a write of the frame is one file."""
+    values = row if row is not None else (None,) * len(schema.fields)
+    return spark.range(0, 0 if row is None else 1, 1, 1).select(
+        *[F.lit(v).cast(f.dataType).alias(f.name)
+          for v, f in zip(values, schema.fields)]
+    )
+
+
 class Warehouse:
     """A directory of named parquet tables + tiny JSON metadata."""
 
@@ -207,7 +221,7 @@ class Warehouse:
             return reader.parquet(self.path(table))
         if schema is None:
             raise FileNotFoundError(f"table {table!r} missing and no schema given")
-        return self.spark.createDataFrame([], schema)
+        return literal_frame(self.spark, schema)
 
     # -- write -------------------------------------------------------------
     def check_constraints(self, table: str, df: DataFrame) -> None:
@@ -817,7 +831,7 @@ class Warehouse:
             if m["files"]:
                 df = self._read_files_dv(table, m, m["files"]).limit(0)
             elif schema is not None:
-                df = self.spark.createDataFrame([], schema)
+                df = literal_frame(self.spark, schema)
             else:
                 raise FileNotFoundError(
                     f"table {table!r} empty and no schema given"
@@ -870,7 +884,7 @@ class Warehouse:
                 raise FileNotFoundError(
                     f"table {table!r} missing and no schema given"
                 )
-            return self.spark.createDataFrame([], schema)
+            return literal_frame(self.spark, schema)
         return self._read_files_dv(table, m, m["files"])
 
     # Deletion-vector row identity: (file key, parquet row index). The

@@ -448,7 +448,7 @@ HEADLINE = [
     # round-11 additions: token-level decontamination, the end-to-end
     # release-gate composition, and the two governance audits.
     # r12 (r11 verdict item 3): the BENCHED decontamination entry is
-    # the production-fast configuration (xxhash64 + row_vocab fold);
+    # the production-fast configuration (xxhash64 + vocab_join fold);
     # the portable-md5 entry stays registered with its cross-engine
     # hash oracle but leaves the suite — a 100 TB deployment never
     # runs md5 folds in the hot path, so benching it as the canonical
@@ -905,26 +905,39 @@ REGRESSION_PCT = 20.0
 REGRESSION_MIN_SEC = 1.0
 
 
-def _regression_report(timings: dict[str, float]) -> None:
-    import glob
+def _reference_record(paths: list[str], cpus: int) -> dict | None:
+    """Per-query seconds of the newest recorded bench run (highest round
+    number, not lexical order: r10 is newer than r9) that ran on
+    ``cpus`` cores. ``BENCH_r13.json`` (32 cores) and
+    ``BENCH_r13_c8.json`` (8 cores) share a round, so the round alone
+    cannot choose between them."""
     import re
 
-    here = os.path.dirname(os.path.abspath(__file__))
-    prev = None
-    # Numeric round sort: lexical reverse would pick BENCH_r9 over
-    # BENCH_r10 once rounds reach two digits.
-    paths = sorted(
-        glob.glob(os.path.join(here, "BENCH_r*.json")),
-        key=lambda p: int(re.search(r"BENCH_r(\d+)", p).group(1)),
-        reverse=True,
-    )
-    for path in paths:
+    def round_of(path: str) -> int:
+        return int(re.search(r"BENCH_r(\d+)", os.path.basename(path)).group(1))
+
+    for path in sorted(paths, key=round_of, reverse=True):
         try:
             with open(path) as f:
-                prev = json.load(f).get("parsed", {}).get("queries")
-            break
-        except Exception:
+                record = json.load(f)
+        except (OSError, ValueError):
             continue
+        if record.get("cpus") == cpus:
+            return record.get("parsed", {}).get("queries")
+    return None
+
+
+def _regression_report(timings: dict[str, float]) -> None:
+    import glob
+
+    from _event_intelligence_data_warehouse_spark.session import (
+        default_parallelism,
+    )
+
+    here = os.path.dirname(os.path.abspath(__file__))
+    prev = _reference_record(
+        glob.glob(os.path.join(here, "BENCH_r*.json")), default_parallelism()
+    )
     # Reference precedence FLIPPED in round 10 (r9 verdict item 5,
     # standing rule): the CURATED clean-box record wins and the
     # driver-recorded JSON backfills entries it lacks. Rationale: the

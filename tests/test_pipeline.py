@@ -107,6 +107,16 @@ def test_one_pass_checks_match_per_check_functions(spark):
     from _event_intelligence_data_warehouse_spark.plans.staging import stage_events
 
     raw = _dirty_raw(spark, "/root/testdata/sf0.001")
+    # duplicates whose raw_event_id is NULL: within one source, and with
+    # a NULL source too
+    first = raw.orderBy("raw_event_id").limit(3)
+    raw = raw.unionByName(
+        first.withColumn("raw_event_id", F.lit(None).cast("string"))
+    ).unionByName(
+        first.limit(2)
+        .withColumn("raw_event_id", F.lit(None).cast("string"))
+        .withColumn("source", F.lit(None).cast("string"))
+    )
 
     singles = [
         qc.check_null_event_names(raw, "t"),
@@ -283,3 +293,126 @@ def test_summary_counts_missing_tables_as_zero(spark, tmp_path):
     got = pipeline.summary(wh)
     assert got.pop("raw_events") == 40
     assert set(got.values()) == {0}
+
+
+def test_ingestion_log_rows_equal_create_dataframe_rows(spark, tmp_path):
+    """``bronze._log`` builds its row from JVM literals: the rows equal
+    those ``createDataFrame`` builds from the same values in all nine
+    columns, NULLs and microsecond timestamps included, before and after
+    the write, and every row is written as one file."""
+    import os
+    from datetime import datetime
+
+    from _event_intelligence_data_warehouse_spark import schemas
+    from _event_intelligence_data_warehouse_spark.sources import bronze
+    from _event_intelligence_data_warehouse_spark.storage import (
+        Warehouse,
+        literal_frame,
+    )
+
+    t0 = datetime(2026, 3, 29, 1, 59, 59, 999999)
+    t1 = datetime(2026, 10, 25, 2, 30, 0, 1)
+    runs = [
+        ("run-a", "csv", t0, None, 0, 0, "running", None),
+        ("run-a", "csv", t0, t1, 2_000_000_000, 7, "success", None),
+        ("run-b", None, t1, t1, 0, 0, "failed", "boom: 'x'\né"),
+    ]
+    want = [
+        spark.createDataFrame([(None, *r)], schemas.INGESTION_LOG).first()
+        for r in runs
+    ]
+    got = [
+        literal_frame(spark, schemas.INGESTION_LOG, (None, *r)).first()
+        for r in runs
+    ]
+    assert got == want
+
+    wh = Warehouse(spark, str(tmp_path / "wl"))
+    for r in runs:
+        bronze._log(wh, spark, *r)
+    stored = wh.read(bronze.INGESTION_LOG, schemas.INGESTION_LOG).collect()
+    assert sorted(stored, key=repr) == sorted(want, key=repr)
+    files = [f for f in os.listdir(wh.path(bronze.INGESTION_LOG))
+             if f.endswith(".parquet")]
+    assert len(files) == len(runs)
+
+
+def test_log_row_and_missing_table_plans_scan_no_python_rows(spark, tmp_path):
+    """The run-log row and every missing-table read are JVM literal
+    plans: no ``ExistingRDD`` scan, so no Python worker starts."""
+    from _event_intelligence_data_warehouse_spark import schemas
+    from _event_intelligence_data_warehouse_spark.storage import (
+        Warehouse,
+        literal_frame,
+    )
+
+    def plan(df) -> str:
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    # the probe does see a scan of Python rows
+    assert "ExistingRDD" in plan(spark.createDataFrame([(1,)], "a int"))
+
+    log = literal_frame(spark, schemas.INGESTION_LOG,
+                        (None, "r", "csv", None, None, 1, 1, "success", None))
+    legacy = Warehouse(spark, str(tmp_path / "legacy"))
+    manifest = Warehouse(spark, str(tmp_path / "manifest"), manifest=True)
+    empties = [
+        legacy.read("nope", schemas.FACT_EVENTS),
+        manifest.read("nope", schemas.FACT_EVENTS),
+        manifest.scan("nope", [("event_sk", ">", 0)], schemas.FACT_EVENTS),
+    ]
+    for df in [log, *empties]:
+        assert "ExistingRDD" not in plan(df)
+    for df in empties:
+        assert [(f.name, f.dataType) for f in df.schema] == [
+            (f.name, f.dataType) for f in schemas.FACT_EVENTS
+        ]
+        assert df.count() == 0
+
+
+def test_step_quality_rows_equal_per_check_functions(spark, tmp_path):
+    """step_quality's one raw scan logs the same five rows as the five
+    per-check functions, on the dirty sample plus duplicates appended
+    past bronze's dedup (some with a NULL ``raw_event_id``)."""
+    from _event_intelligence_data_warehouse_spark import schemas
+    from _event_intelligence_data_warehouse_spark.plans import quality as qc
+    from _event_intelligence_data_warehouse_spark.plans.staging import stage_events
+    from _event_intelligence_data_warehouse_spark.storage import Warehouse
+
+    whdir = str(tmp_path / "whq")
+    pipeline.run_pipeline(spark, whdir, _args(sample_rows=300, dirty=True))
+    wh = Warehouse(spark, whdir)
+    raw = pipeline.read_table(wh, "raw_events")
+    n_null = raw.filter(F.col("raw_event_id").isNull()).count()
+    keyed = raw.filter(F.col("raw_event_id").isNotNull()).orderBy("raw_event_id")
+    dups = keyed.limit(4).unionByName(
+        keyed.limit(3).withColumn("raw_event_id", F.lit(None).cast("string"))
+    )
+    wh.append("raw_events", dups)
+
+    raw = pipeline.read_table(wh, "raw_events")
+    singles = [
+        qc.check_null_event_names(raw, "q"),
+        qc.check_invalid_event_dates(raw, "q"),
+        qc.check_price_min_gt_max(stage_events(raw), "q"),
+        qc.check_duplicate_event_ids(raw, "q"),
+        qc.check_orphan_fact_records(
+            *[pipeline.read_table(wh, t) for t in (
+                "fact_events", "dim_date", "dim_venue", "dim_category",
+                "dim_source")],
+            "q",
+        ),
+    ]
+    fields = [f.name for f in schemas.QUALITY_LOG if f.name != "checked_at"]
+
+    def key(rows):
+        return sorted(tuple(r[c] for c in fields) for r in rows)
+
+    want = key(r for df in singles for r in df.collect())
+    pipeline.step_quality(wh, spark, "q")
+    got = key(pipeline.read_table(wh, "quality_log")
+              .filter(F.col("run_id") == "q").collect())
+    assert got == want
+    # 4 copies, and the NULL-id rows of one source form one group
+    dup = {r[2]: r for r in want}["duplicate_event_ids"]
+    assert dup[fields.index("records_failed")] == 4 + n_null + 2
